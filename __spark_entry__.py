@@ -10663,7 +10663,10 @@ def rrf_hybrid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable), then fuse with k=60: union + ONE groupBy, no
     join between rankings. Returns the fused top-20 with how many
     rankers surfaced each doc."""
-    from mydatalake_spark.functions.vectors import cosine_similarity
+    from mydatalake_spark.functions.vectors import (
+        _sql_double_array,
+        cosine_similarity,
+    )
     from mydatalake_spark.similarity.fusion import rank_top_n, rrf_fuse
 
     docs = _t(spark, sf_dir, "documents", spread=True)
@@ -10672,7 +10675,7 @@ def rrf_hybrid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_scores(docs, _BM25_TERMS), F.col("bm25"), "doc_id", 50
     )
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
+    qlit = F.expr(_sql_double_array(qv))
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     sem_scored = emb.select(
         F.col("vec_id").alias("doc_id"),

@@ -5,12 +5,50 @@
 these evaluate inside the scan/project stage; the expensive part of
 similarity search is the *join strategy* (see similarity/), not the
 arithmetic.
+
+Plan literals (centroids, query vectors, hash-family coefficients) are
+emitted as ONE parsed SQL expression, never as one ``Column`` per
+element: every ``F.*`` call is a py4j round trip to the JVM, and
+PySpark's call-site capture adds about eight more, so an unrolled
+8 × 64 centroid literal costs over 1,500 round trips per build, while
+``F.expr`` over the rendered string is one call whatever the literal's
+size, and parses to the same Catalyst expressions.
+:func:`_sql_double_array` renders the doubles and :func:`_sql_dot` the
+dot product.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def _sql_double_array(values) -> str:
+    """``values`` as a Spark SQL ``array<double>`` literal whose
+    elements parse back to the same 64 bits: ``repr`` is the shortest
+    decimal that round-trips, and NaN/±inf, which have no literal
+    syntax, become foldable string casts."""
+
+    def one(x) -> str:
+        x = float(x)
+        if math.isfinite(x):
+            return f"{x!r}D"
+        if math.isnan(x):
+            return "CAST('NaN' AS DOUBLE)"
+        return f"CAST('{'' if x > 0 else '-'}Infinity' AS DOUBLE)"
+
+    return f"array({', '.join(one(x) for x in values)})"
+
+
+def _sql_dot(a: str, b: str) -> str:
+    """SQL text of :func:`dot` over two array expressions: the same
+    sequential fold from 0.0, so it gives the same bits."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * y), "
+        "cast(0.0 as double), (acc, x) -> acc + x)"
+    )
 
 
 def _as_double(col: Column | str) -> Column:

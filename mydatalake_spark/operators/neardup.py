@@ -98,7 +98,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, signature array<long>[num_hashes]) — minₛ (aᵢ·h(s)+bᵢ mod p)
     per hash family member. Pure expressions over xxhash64; empty docs
-    get null signatures."""
+    get null signatures. The signature is one ``transform`` over the
+    literal array of the family's (a, b) coefficients, so building the
+    plan costs a constant number of JVM calls at any ``num_hashes``."""
     import random
 
     rng = random.Random(seed)
@@ -121,14 +123,13 @@ def minhash_signatures(
     )
     th = F.col("__th__")
 
-    # One-arg lambda per hash family member, built via a factory —
-    # extra default args would change the arity PySpark infers for the
-    # higher-order function.
-    def _affine(a: int, b: int):
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_PRIME))
-
-    sig = F.array(
-        *[F.array_min(F.transform(th, _affine(a, b))) for a, b in coeffs]
+    # The whole family is ONE parsed expression over a literal array of
+    # (a, b) structs (the functions/vectors.py rule), so the build costs
+    # the same few JVM calls at any num_hashes.
+    family = ", ".join(f"named_struct('a', {a}, 'b', {b})" for a, b in coeffs)
+    sig = F.expr(
+        f"transform(array({family}), c -> array_min("
+        f"transform(__th__, h -> pmod(h * c.a + c.b, {_PRIME}))))"
     )
     return staged.select(
         F.col(id_col), F.when(F.size(th) > 0, sig).alias("signature")

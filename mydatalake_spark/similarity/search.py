@@ -29,7 +29,7 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import _sql_dot, _sql_double_array, cosine_similarity
 from ..operators.dedup import dedup_latest
 
 
@@ -318,13 +318,7 @@ def _centroid_scores_expr(centroids):
                 f"(str), got {type(vec_name).__name__}"
             )
         dots = ", ".join(
-            "aggregate(zip_with(`{v}`, array({arr}), "
-            "(x, y) -> cast(x as double) * y), "
-            "cast(0.0 as double), (acc, x) -> acc + x)".format(
-                v=vec_name,
-                arr=", ".join(f"{float(x)!r}D" for x in c),
-            )
-            for c in centroids
+            _sql_dot(f"`{vec_name}`", _sql_double_array(c)) for c in centroids
         )
         return F.expr(f"array({dots})")
 

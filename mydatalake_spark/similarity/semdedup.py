@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot, l2_norm
+from ..functions.vectors import _sql_dot, _sql_double_array, dot, l2_norm
 
 
 def semantic_dedup(
@@ -56,7 +56,13 @@ def semantic_dedup(
     pair join and no dedup pass (3× the expression path at sf0.1;
     this is also how production SemDeDup runs, on GPUs).
     ``pair_backend="expr"`` keeps the pure-JVM pair equi-join for
-    Python-worker-free deployments — identical results."""
+    Python-worker-free deployments — identical results.
+
+    Cell assignment scores every vector against the elected centroids
+    with ONE ``transform`` over an ``array<array<double>>`` literal of
+    them, so building the plan costs a constant number of JVM calls at
+    any ``n_clusters``; NaN/±inf centroid components survive the
+    literal bit for bit."""
     if pair_backend not in ("blas", "expr"):
         raise ValueError(f"unknown pair_backend: {pair_backend!r}")
     # Content-addressed centroid election: tiny (n_clusters × dim),
@@ -73,29 +79,27 @@ def semantic_dedup(
     )
     centroids = [list(r["v"]) for r in cent_rows]
 
-    # Per-row norm computed ONCE and carried through the pair join:
-    # each candidate pair then costs a single fold (the dot product)
-    # instead of three — dot/(na·nb) is the exact same arithmetic as
-    # cosine_similarity (and DuckDB's LIST_COSINE_SIMILARITY), just
-    # with the row-constant factors hoisted out of the O(Σcell²) loop
-    # (measured 3× on the sf0.1 pair stage, bit-identical results).
-    nrm = l2_norm(vec_col)
-    scores = F.array(
-        *[
-            F.coalesce(
-                F.round(
-                    F.when(
-                        nrm * l2_norm(lit_c := F.array(
-                            *[F.lit(float(x)) for x in c]
-                        )) > 0,
-                        dot(vec_col, lit_c) / (nrm * l2_norm(lit_c)),
-                    ),
-                    6,
-                ),
-                F.lit(-2.0),  # zero-norm vectors: below every cosine
-            )
-            for c in centroids
-        ]
+    # Per-row norm computed ONCE, as a real column, and carried through
+    # the pair join: each candidate pair then costs a single fold (the
+    # dot product) instead of three — dot/(na·nb) is the exact same
+    # arithmetic as cosine_similarity (and DuckDB's
+    # LIST_COSINE_SIMILARITY), just with the row-constant factors
+    # hoisted out of the O(Σcell²) loop (measured 3× on the sf0.1 pair
+    # stage, bit-identical results). The centroid lambda below reads it
+    # too, instead of re-folding the row vector per centroid.
+    normed = df.withColumn("__nrm__", l2_norm(vec_col))
+    # Centroid scores as ONE parsed expression over the n_clusters × dim
+    # literal (the functions/vectors.py rule): the build costs the same
+    # few JVM calls at any n_clusters. _sql_dot is vectors.dot's fold, so
+    # scores are bit-identical to the Column-built cosine; zero-norm
+    # vectors score -2, below every cosine.
+    v = "`" + vec_col.replace("`", "``") + "`"
+    denom = f"__nrm__ * sqrt({_sql_dot('__c', '__c')})"
+    cents = ", ".join(_sql_double_array(c) for c in centroids)
+    scores = F.expr(
+        f"transform(cast(array({cents}) as array<array<double>>), "
+        f"__c -> coalesce(round(CASE WHEN {denom} > 0 "
+        f"THEN {_sql_dot(v, '__c')} / ({denom}) END, 6), -2.0D))"
     )
     # Cell = argmax of the centroid-score array; the array (n_clusters
     # cosine folds) is materialized ONCE through an intermediate
@@ -103,10 +107,10 @@ def semantic_dedup(
     # array_position(a, array_max(a)) — see search._assign_argmax.
     from .search import _assign_argmax
 
-    assigned = _assign_argmax(df, scores, "cell").select(
+    assigned = _assign_argmax(normed, scores, "cell").select(
         F.col(id_col),
         F.col(vec_col).alias("__v__"),
-        nrm.alias("__nrm__"),
+        F.col("__nrm__"),
         F.col("cell"),
     )
 
